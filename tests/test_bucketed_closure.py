@@ -153,38 +153,3 @@ def test_one_file_per_partition_bucket(spark, bucketed):
         files = glob.glob(os.path.join(d, "*.parquet"))
         # aligned repartition: at most one file per bucket
         assert 0 < len(files) <= 4, (d, files)
-
-
-def test_pruned_serving_parity_with_cached_closure(spark):
-    """VERDICT r4 #3: a TreeOfLifeV3 bound to the bucketed layout serves
-    mrca / node_info lineage / induced_subtree through the bucket-pruned
-    fetch with responses IDENTICAL to the cached-closure InSet path."""
-    from pathlib import Path
-
-    from treemachine_spark.api.v3 import TreeOfLifeV3
-    from treemachine_spark.ingest import ingest_synthesis_data
-
-    FIX = Path(__file__).parent / "fixtures"
-    store = ingest_synthesis_data(
-        spark,
-        str(FIX / "labelled_supertree.tre"),
-        str(FIX / "annotations.json"),
-        str(FIX / "taxonomy.tsv"),
-    )
-    write_bucketed_closure([store], table="t_paths_srv", buckets=4)
-    try:
-        plain = TreeOfLifeV3(store)
-        pruned = TreeOfLifeV3(store, pruned_closure_table="t_paths_srv")
-        tips = sorted(
-            r["node_id"]
-            for r in store.nodes.where(F.col("is_leaf")).collect()
-        )
-        assert pruned.mrca(node_ids=tips[:3]) == plain.mrca(node_ids=tips[:3])
-        assert pruned.node_info(
-            node_id=tips[0], include_lineage=True
-        ) == plain.node_info(node_id=tips[0], include_lineage=True)
-        assert pruned.induced_subtree(
-            node_ids=tips[:3]
-        ) == plain.induced_subtree(node_ids=tips[:3])
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_paths_srv")

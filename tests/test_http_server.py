@@ -18,11 +18,6 @@ FIX = Path(__file__).parent / "fixtures"
 _SRV: dict = {}
 
 
-
-# the whole HTTP-serving e2e tier is multi-minute (serving soak, not
-# semantics): opt-in via -m slow (pyproject addopts)
-pytestmark = pytest.mark.slow
-
 @pytest.fixture(scope="module")
 def base_url(spark):
     store = ingest_synthesis_data(
@@ -249,6 +244,7 @@ def test_cache_invalidated_on_store_republish(spark, tmp_path):
     assert (status2, again) == (status, after)
 
 
+@pytest.mark.slow  # measured at 6-41 s on 4 cores
 def test_stats_quantiles_route(spark, base_url, tmp_path):
     """VERDICT r5 #6: the streaming quantile sketch gets a serving
     consumer — POST /v3/stats/quantiles returns per-group estimates over
@@ -403,6 +399,35 @@ def test_route_family_fair_pool_scoping(monkeypatch):
     }
 
 
+def test_unexpected_error_is_500_with_logged_traceback(monkeypatch, caplog):
+    """An unexpected exception inside a route still answers the 500
+    payload, and the traceback reaches the server's log (the HTTP
+    handler's own access log is silenced)."""
+    import logging
+
+    from treemachine_spark.api import server as srv_mod
+    from treemachine_spark.api.server import ServerCore
+
+    monkeypatch.setattr(
+        ServerCore, "_build", lambda self, s: (
+            setattr(self, "store", s), setattr(self, "apis", {})
+        )
+    )
+
+    def boom(apis, path, body):
+        raise RuntimeError("index corrupted")
+
+    monkeypatch.setattr(srv_mod, "_dispatch", boom)
+    core = ServerCore({}, cache_size=0)
+    with caplog.at_level(logging.ERROR, logger=srv_mod.__name__):
+        status, resp = core.handle("/v3/tree_of_life/mrca", {"node_ids": ["x"]})
+    assert (status, resp) == (500, {"message": "RuntimeError: index corrupted"})
+    [rec] = [r for r in caplog.records if r.name == srv_mod.__name__]
+    assert rec.exc_info and rec.exc_info[0] is RuntimeError
+    assert "/v3/tree_of_life/mrca" in rec.getMessage()
+    assert "Traceback" in caplog.text and "index corrupted" in caplog.text
+
+
 def test_swap_mid_compute_never_caches_stale_response(monkeypatch):
     """ADVICE r5: a request that BEGINS against the old store (Spark jobs
     take seconds) and finishes after swap_store clears the cache must not
@@ -449,6 +474,7 @@ def test_swap_mid_compute_never_caches_stale_response(monkeypatch):
     assert core.cache.misses == m + 1
 
 
+@pytest.mark.slow  # measured at 6-41 s on 4 cores
 def test_router_dispatches_to_real_tree_workers(spark, tmp_path):
     """Two REAL single-store servers behind the ShardRouter: synth_id picks
     the worker, responses are tree-specific, and default traffic flows to
@@ -646,6 +672,7 @@ def test_stats_distinct_route(spark, base_url, tmp_path):
         srv.server_close()
 
 
+@pytest.mark.slow  # measured at 6-41 s on 4 cores
 def test_stats_profile_route(spark, base_url, tmp_path):
     """r10 (r8 verdict carry): POST /v3/stats/profile — per-group quantile
     AND distinct-count estimates in ONE round trip over BOTH running
@@ -752,6 +779,7 @@ def test_stats_profile_empty_sketch_contract(spark, tmp_path):
     srv.server_close()
 
 
+@pytest.mark.slow  # measured at 6-41 s on 4 cores
 def test_similarity_topk_route(spark, base_url):
     """r8: the ANN serving surface — POST /v3/similarity/topk over a
     loaded AnnIndex (api/ann.py) completes the pipeline family's
@@ -966,6 +994,7 @@ def test_similarity_topk_route(spark, base_url):
         srv.server_close()
 
 
+@pytest.mark.slow  # measured at 6-41 s on 4 cores
 def test_sharded_similarity_scatter_gather(spark, base_url):
     """r8: ANN scatter-gather through the shard router — two workers each
     serving a DISJOINT corpus half; the router fans /v3/similarity/topk
@@ -1040,6 +1069,7 @@ def test_sharded_similarity_scatter_gather(spark, base_url):
             srv.server_close()
 
 
+@pytest.mark.slow  # measured at 6-41 s on 4 cores
 def test_documents_duplicates_route(spark, base_url):
     """r8: the dedup serving surface — POST /v3/documents/duplicates over
     a loaded DedupIndex (api/dedup.py). 'texts' = decontamination lookup
@@ -1135,6 +1165,7 @@ def test_documents_duplicates_route(spark, base_url):
         srv.server_close()
 
 
+@pytest.mark.slow  # measured at 6-41 s on 4 cores
 def test_sharded_duplicates_scatter_gather(spark, base_url):
     """r8/r9: dedup scatter-gather — 'texts' lookups fan out to disjoint
     document shards and the UNION of per-shard hits equals the unsharded
@@ -1275,6 +1306,7 @@ def test_sharded_duplicates_scatter_gather(spark, base_url):
             srv.server_close()
 
 
+@pytest.mark.slow  # measured at 6-41 s on 4 cores
 def test_sharded_doc_ids_null_text_member(spark, base_url):
     """r10 (r9 ADVICE): a corpus MEMBER whose text column is NULL. The
     unsharded probe indexes it as the single empty shingle (NULL's
@@ -1338,6 +1370,7 @@ def test_sharded_doc_ids_null_text_member(spark, base_url):
             srv.server_close()
 
 
+@pytest.mark.slow  # measured at 6-41 s on 4 cores
 def test_pq_append_republish_served_end_to_end(spark, base_url, tmp_path):
     """r9 (r8 verdict #6): the pq_append freshness flow as ONE served
     path — a vector appended to the persisted PQ index is FOUND after
@@ -1444,6 +1477,7 @@ def test_swap_indexes_republishes_dedup_snapshot(spark, base_url):
     assert core.dedup_index.index.is_cached  # the live snapshot keeps its cache
 
 
+@pytest.mark.slow  # measured at 6-41 s on 4 cores
 def test_sharded_stats_scatter_gather(spark, base_url, tmp_path):
     """r10: streaming-sketch stats scatter — workers each maintain a
     running sketch over a DISJOINT slice of the ingest stream; the router
@@ -1785,6 +1819,7 @@ def test_stats_scatter_families_version_skew(spark, base_url, tmp_path):
             srv.server_close()
 
 
+@pytest.mark.slow  # measured at 6-41 s on 4 cores
 def test_weighted_scheduler_pools_optin(spark):
     """r12 (NOTES candidate #2): the packaged fairscheduler.xml gives the
     serving route families weighted pools (interactive 4/8, index 2/4,

@@ -19,8 +19,10 @@ with {"message": ...}; BadIdsError → 400 carrying the partial response
 payload (BadIdsException.java:9-51, tree_of_life_v3.java:359-361).
 
 Serving model: ONE long-lived SparkSession per process (the reference's
-embedded-DB analog); the handler is threaded, and Spark schedules
-concurrent request jobs FIFO-fair across its local threads. Start with:
+embedded-DB analog); the handler is threaded. Tree routes read the served
+snapshot's TreeIndex in-process (no Spark job below the distributed
+subtree threshold); the stats, similarity and dedup routes run Spark
+jobs, which Spark schedules fair across its local threads. Start with:
 
   python -m treemachine_spark.cli serve <dbname> [--port 1984]
 """
@@ -28,12 +30,15 @@ concurrent request jobs FIFO-fair across its local threads. Start with:
 from __future__ import annotations
 
 import json
+import logging
 import os
 import threading
 from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from treemachine_spark.api.errors import BadIdsError, BadInputError, TreeTooBigError
+
+log = logging.getLogger(__name__)
 
 
 class ResponseCache:
@@ -222,7 +227,6 @@ class ServerCore:
         self,
         store,
         cache_size: int = 256,
-        pruned_closure_table: str | None = None,
         stats_sketch=None,
         distinct_sketch=None,
         ann_index=None,
@@ -254,7 +258,6 @@ class ServerCore:
         # /v3/documents/duplicates on the same snapshot contract
         self.dedup_index = dedup_index
         self.cache = ResponseCache(cache_size) if cache_size > 0 else None
-        self.pruned_closure_table = pruned_closure_table
         # Store generation: bumped by swap_store AFTER the new APIs are
         # bound, under the cache lock. A request captures the generation
         # before computing; the cache skips the insert when it changed
@@ -268,9 +271,7 @@ class ServerCore:
         from treemachine_spark.api.v2 import TreeOfLifeV2
         from treemachine_spark.api.v3 import TreeOfLifeV3
 
-        v3 = TreeOfLifeV3(
-            store, pruned_closure_table=self.pruned_closure_table
-        )
+        v3 = TreeOfLifeV3(store)
         self.store = store
         self.apis = {"v3": v3, "v2": TreeOfLifeV2(v3)}
 
@@ -387,6 +388,7 @@ class ServerCore:
                 # mix old-store computation into the post-swap cache
                 return self._in_pool(path, lambda: _dispatch(self.apis, path, body))
             except Exception as e:  # unexpected -> 500, never kill the server
+                log.exception("500 on %s", path)
                 return 500, {"message": f"{type(e).__name__}: {e}"}
 
         if self.cache is None:
@@ -413,6 +415,7 @@ class ServerCore:
         try:
             summary = self.reload_fn() or {}
         except Exception as e:
+            log.exception("500 on %s", ADMIN_RELOAD_ROUTE)
             return 500, {"message": f"reload failed: {type(e).__name__}: {e}"}
         return 200, {"reloaded": True, **summary}
 
@@ -434,6 +437,7 @@ class ServerCore:
             except (BadInputError, TreeTooBigError) as e:
                 return 400, {"message": str(e)}
             except Exception as e:
+                log.exception("500 on %s", route)
                 return 500, {"message": f"{type(e).__name__}: {e}"}
 
         if sketch is None:
@@ -477,6 +481,7 @@ class ServerCore:
             except (BadInputError, TreeTooBigError) as e:
                 return 400, {"message": str(e)}
             except Exception as e:
+                log.exception("500 on %s", PROFILE_ROUTE)
                 return 500, {"message": f"{type(e).__name__}: {e}"}
 
         if self.cache is None:
@@ -562,6 +567,7 @@ class ServerCore:
                 try:
                     return 200, self._sketch_state(sk)
                 except Exception as e:
+                    log.exception("500 on %s", STATE_ROUTE)
                     return 500, {"message": f"{type(e).__name__}: {e}"}
 
             if self.cache is None:
@@ -641,6 +647,7 @@ class ServerCore:
             except BadInputError as e:
                 return 400, {"message": str(e)}
             except Exception as e:
+                log.exception("500 on %s", route)
                 return 500, {"message": f"{type(e).__name__}: {e}"}
 
         if self.cache is None:
@@ -766,7 +773,6 @@ def make_server(
     host: str = "127.0.0.1",
     port: int = 1984,
     cache_size: int = 256,
-    pruned_closure_table: str | None = None,
     stats_sketch=None,
     distinct_sketch=None,
     ann_index=None,
@@ -787,7 +793,7 @@ def make_server(
     api/ann.AnnIndex) serves POST /v3/similarity/topk; ``dedup_index``
     (an api/dedup.DedupIndex) serves POST /v3/documents/duplicates."""
     core = ServerCore(
-        store, cache_size, pruned_closure_table, stats_sketch, distinct_sketch,
+        store, cache_size, stats_sketch, distinct_sketch,
         ann_index, dedup_index, topk_sketch, reload_fn,
     )
 
@@ -827,7 +833,6 @@ def serve(
     host: str = "127.0.0.1",
     port: int = 1984,
     cache_size: int = 256,
-    pruned_closure_table: str | None = None,
     stats_sketch=None,
     distinct_sketch=None,
     ann_index=None,
@@ -840,7 +845,6 @@ def serve(
         host,
         port,
         cache_size=cache_size,
-        pruned_closure_table=pruned_closure_table,
         stats_sketch=stats_sketch,
         distinct_sketch=distinct_sketch,
         ann_index=ann_index,

@@ -10,20 +10,26 @@ semantics (validated by the ported ws-tests combinators in tests/):
   subtree          tree_of_life_v3.java:522-722 (doSubtree)
   induced_subtree  tree_of_life_v3.java:411-518 (doInducedSubtree)
 
-Execution model: all heavy lifting (resolution joins, MRCA aggregation,
-closure filters) is distributed DataFrame work; only request-sized results
-are collected for response assembly, so each endpoint scales with its
-*answer*, not the tree.
+Execution model: binding a store builds its interval-labelled TreeIndex
+(graph/tree_index.py) once, and every point route is answered in-process
+from it with no Spark job: ids resolve by hash lookup, lineage and the
+nearest taxon by parent chasing, the MRCA by interval containment, and a
+subtree is a pre-order range. Spark keeps ingest, the batch gates over the
+closure (graph/traversal.py) and subtree/arguson outputs above
+DISTRIBUTED_*_THRESHOLD edges, which are assembled executor-side per
+anchor fragment.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from treemachine_spark.api.errors import BadIdsError, BadInputError, TreeTooBigError
 from treemachine_spark.exporters.newick_sink import assemble_newick
 from treemachine_spark.graph import traversal as T
+from treemachine_spark.graph.tree_index import TreeIndex
 from treemachine_spark.ingest import GraphStore
 
 _ANN_FIELDS = [
@@ -35,12 +41,15 @@ _ANN_FIELDS = [
     "terminal",
 ]
 
+_TAXON_COLUMNS = ("name", "unique_name", "rank", "ott_id", "tax_sources")
+_BLOB_COLUMNS = ("node_id", *_TAXON_COLUMNS, "tip_descendants", *_ANN_FIELDS)
+
 LABEL_FORMATS = ("name", "id", "name_and_id")
 
 
 def _blob_from_dict(d: dict, default_num_tips: int) -> dict:
     """One node's arguson/node_info blob from a plain field dict — shared
-    by the driver path (Row.asDict()) and the distributed arguson path
+    by the index path (TreeIndex.records) and the distributed arguson path
     (json.loads of a to_json'd struct, where null fields are OMITTED), so
     both assemble structurally identical blobs. P1/P2 field semantics:
     GraphExplorer.getTaxonBlob/getNodeBlob (GraphExplorer.java:180-214);
@@ -221,88 +230,54 @@ class TreeOfLifeV3:
         max_tips_newick: int | None = 100_000,
         max_tips_arguson: int | None = 25_000,
         enforce_caps: bool = False,
-        pruned_closure_table: str | None = None,
     ):
         """``enforce_caps=False`` by default: Spark removes the reason for
         the reference's hard 100k/25k caps (tree_of_life_v3.java:591-592);
         set True for byte-level API parity.
 
-        ``pruned_closure_table`` names a ``write_bucketed_closure``
-        warehouse table for this store: request-scale closure fetches
-        (mrca, node_info lineage, induced_subtree, the MRTA probe) then
-        read ONLY the node_id buckets the request's ids hash to instead of
-        InSet-scanning the cached closure — the 100 TB serving shape,
-        where the closure is never executor-cache-resident (VERDICT r4
-        #3; per-request catalog re-planning costs ~0.2 s locally, numbers
-        in NOTES_r5)."""
+        Builds the snapshot's TreeIndex (one Arrow pull of the node, edge,
+        annotation and source-map tables); every point route below reads
+        only the index."""
         self.store = store
         self.max_tips_newick = max_tips_newick
         self.max_tips_arguson = max_tips_arguson
         self.enforce_caps = enforce_caps
-        self.pruned_closure_table = pruned_closure_table
-        # tiny dimension tables, kept driver-side (broadcast-equivalent)
-        self._source_map = {
-            r["source_id"]: {
-                k: r[k] for k in ("study_id", "tree_id", "git_sha") if r[k] is not None
-            }
-            for r in store.source_map.collect()
-        }
+        self.index = TreeIndex.from_store(store)
 
     # ------------------------------------------------------------------
     # resolution (L1-L4)
     # ------------------------------------------------------------------
 
-    def _resolve_many(self, node_ids, ott_ids):
-        """L4 — one join pass instead of the reference's per-id index loop
-        (tree_of_life_v3.java:292-330). Returns (found_node_ids ordered,
-        node_ids_not_in_tree, ott_ids_not_in_tree)."""
-        spark = self.store.nodes.sparkSession
-        node_ids = list(node_ids or [])
-        ott_ids = [int(o) for o in (ott_ids or [])]
-        found: list[str] = []
-        bad_nodes: list[str] = []
-        bad_otts: list[int] = []
-        if node_ids:
-            req = T.local_df(spark, [(i,) for i in node_ids], "node_id string")
-            hits = {
-                r["node_id"]
-                for r in self.store.nodes.join(
-                    F.broadcast(req), "node_id", "left_semi"
-                ).collect()
-            }
-            for i in node_ids:
-                (found if i in hits else bad_nodes).append(i)
-        if ott_ids:
-            req = T.local_df(spark, [(int(i),) for i in ott_ids], "ott_id long")
-            hits = {
-                r["ott_id"]: r["node_id"]
-                for r in self.store.nodes.join(
-                    F.broadcast(req), "ott_id", "left_semi"
-                ).select("ott_id", "node_id").collect()
-            }
-            for i in ott_ids:
-                if i in hits:
-                    found.append(hits[i])
-                else:
-                    bad_otts.append(i)
-        return found, bad_nodes, bad_otts
-
-    def _resolve_one(self, node_id=None, ott_id=None) -> dict:
+    def _locate(self, node_id=None, ott_id=None) -> int:
         """L2/L3 — single lookup; errors per badOTTIDError/badNodeIDError
-        (tree_of_life_v3.java:733-745)."""
+        (tree_of_life_v3.java:733-745). Returns the node's index position."""
         if node_id is None and ott_id is None:
             raise BadInputError('Must provide a "node_id" or "ott_id" argument.')
         if node_id is not None and ott_id is not None:
             raise BadInputError('Provide only one "node_id" or "ott_id" argument.')
         if ott_id is not None:
-            rows = self.store.nodes.where(F.col("ott_id") == int(ott_id)).collect()
-            if not rows:
+            p = int(self.index.ott_positions([int(ott_id)])[0])
+            if p < 0:
                 raise BadInputError(f"Could not find any synthetic tree node corresponding to the 'ott_id' arg: '{ott_id}'.")
         else:
-            rows = self.store.nodes.where(F.col("node_id") == node_id).collect()
-            if not rows:
+            p = int(self.index.positions([node_id])[0])
+            if p < 0:
                 raise BadInputError(f"Could not find any synthetic tree node corresponding to the 'node_id' arg: '{node_id}'.")
-        return rows[0].asDict()
+        return p
+
+    def _locate_many(self, node_ids, ott_ids):
+        """L4 — one batched hash lookup instead of the reference's per-id
+        index loop (tree_of_life_v3.java:292-330). Returns (found
+        positions: node ids then ott ids, in request order;
+        node_ids_not_in_tree, ott_ids_not_in_tree)."""
+        node_ids = list(node_ids or [])
+        ott_ids = [int(o) for o in (ott_ids or [])]
+        node_pos = self.index.positions(node_ids).tolist()
+        ott_pos = self.index.ott_positions(ott_ids).tolist()
+        found = [p for p in node_pos + ott_pos if p >= 0]
+        bad_nodes = [i for i, p in zip(node_ids, node_pos) if p < 0]
+        bad_otts = [i for i, p in zip(ott_ids, ott_pos) if p < 0]
+        return found, bad_nodes, bad_otts
 
     # ------------------------------------------------------------------
     # blobs (P1/P2, A3)
@@ -319,46 +294,39 @@ class TreeOfLifeV3:
             "tax_sources": list(row["tax_sources"] or []),
         }
 
-    def _node_blobs(self, node_ids: list[str], unique_sources: set | None = None) -> dict[str, dict]:
+    def _blobs(self, positions, sources: set | None = None) -> list[dict]:
         """P2 — GraphExplorer.getNodeBlob (GraphExplorer.java:203-214) for a
-        batch of nodes in ONE join (the reference loops per node)."""
-        spark = self.store.nodes.sparkSession
-        req = T.local_df(spark, [(i,) for i in node_ids], "node_id string")
-        rows = (
-            req.join(self.store.nodes, "node_id", "left")
-            .join(self.store.node_annotations, "node_id", "left")
-            .join(
-                self.store.edges.select(
-                    F.col("child_id").alias("node_id"), "tip_descendants"
-                ),
-                "node_id",
-                "left",
-            )
-            .collect()
-        )
-        blobs: dict[str, dict] = {}
-        default = int(self.store.tree_meta.get("num_tips", 0))
+        batch of nodes, in ``positions`` order (the reference loops per
+        node). ``sources`` collects the nodes' annotation keys over every
+        annotation map (getSourceIDMap input)."""
+        recs = self.index.records(positions, _BLOB_COLUMNS)
+        if sources is not None:
+            sources.update(self.index.annotation_keys(positions, _ANN_FIELDS))
         # leaf num_tips: the reference stores tip_descendants of the
         # subtree below the edge; keep stored semantics (ingest A1, the
         # reference's getDescendantLeavesNumbers).
-        for r in rows:
-            d = r.asDict()
-            blobs[d["node_id"]] = _blob_from_dict(d, default)
-            if unique_sources is not None:
-                for f in _ANN_FIELDS:
-                    v = d.get(f)
-                    if v:
-                        unique_sources.update(v.keys())
-        return blobs
+        default = int(self.store.tree_meta.get("num_tips", 0))
+        return [_blob_from_dict(d, default) for d in recs]
+
+    def _add_descendant_names(self, blobs: list[dict], positions) -> None:
+        """descendant_name_list for unnamed blobs: the first/last named
+        proper descendant (T9, getNodeBlobArguson GraphExplorer.java:
+        415-429) from a name min/max over the node's pre-order range."""
+        for blob, p in zip(blobs, positions):
+            if "taxon" not in blob:
+                names = self.index.descendant_names(int(p))
+                if names is not None:
+                    blob["descendant_name_list"] = list(names)
 
     def _source_id_map(self, sources: set) -> dict:
         """A3/getSourceIDMap (GraphExplorer.java:217-224): map each source id
         through the source-map table; taxonomy sources (e.g. 'ott2.9draft12')
         get a taxonomy blob."""
+        source_map = self.index.source_map
         out = {}
         for s in sorted(sources):
-            if s in self._source_map:
-                out[s] = self._source_map[s]
+            if s in source_map:
+                out[s] = source_map[s]
             elif s.startswith("ott"):
                 out[s] = {"taxonomy": "ott", "version": s[3:]}
             else:
@@ -369,14 +337,15 @@ class TreeOfLifeV3:
         self, member: DataFrame, fields: tuple = ("supported_by",)
     ) -> DataFrame:
         """Vocabulary-scale distinct annotation source keys for a member
-        node set (A2 input). The explode is subtree-scale (member edges ×
-        annotation keys) but the DISTINCT runs executor-side, so the
-        DataFrame this returns — the only thing collected — has one row
-        per distinct source id (hundreds at most). VERDICT r6 #2:
-        GraphExplorer.getSupportingStudies (GraphExplorer.java:358-399) is
-        a set union; distinct() is that union before the driver transfer.
-        ``fields`` widens the key scan to more annotation maps (arguson
-        collects keys from all of _ANN_FIELDS, getSourceIDMap input)."""
+        node set (A2 input), for the distributed assembly paths. The
+        explode is subtree-scale (member edges × annotation keys) but the
+        DISTINCT runs executor-side, so the DataFrame this returns — the
+        only thing collected — has one row per distinct source id
+        (hundreds at most). VERDICT r6 #2: GraphExplorer.
+        getSupportingStudies (GraphExplorer.java:358-399) is a set union;
+        distinct() is that union before the driver transfer. ``fields``
+        widens the key scan to more annotation maps (arguson collects keys
+        from all of _ANN_FIELDS, getSourceIDMap input)."""
         ann = self.store.node_annotations.join(member, "node_id", "left_semi")
         keys = F.flatten(
             F.array(
@@ -393,7 +362,7 @@ class TreeOfLifeV3:
         356-399): supported_by source keys → study ids, deduped."""
         out = set()
         for s in sources:
-            sid = self._source_map.get(s, {}).get("study_id")
+            sid = self.index.source_map.get(s, {}).get("study_id")
             if sid and sid != "null":
                 out.add(sid)
         return sorted(out)
@@ -402,10 +371,10 @@ class TreeOfLifeV3:
     # labels (P8)
     # ------------------------------------------------------------------
 
-    def _labels(self, node_rows, label_format: str, ids_for_unnamed: bool) -> dict[str, str]:
+    def _labels(self, positions, label_format: str, ids_for_unnamed: bool) -> dict[str, str]:
         """P8 — GraphExplorer.getNodeLabel (GraphExplorer.java:673-694)."""
         labels = {}
-        for r in node_rows:
+        for r in self.index.records(positions, ("node_id", "name", "ott_id")):
             name = r["name"]
             if name is not None:
                 if label_format == "name":
@@ -446,11 +415,11 @@ class TreeOfLifeV3:
             "num_source_studies": meta.get("num_source_studies"),
             "num_source_trees": meta.get("num_source_trees"),
             "filtered_flags": list(meta.get("filtered_flags", [])),
-            "root": self._node_blobs([self.store.root_id])[self.store.root_id],
+            "root": self._blobs([self.index.root])[0],
         }
         if include_source_list:
             res["source_list"] = list(meta.get("sources", []))
-            res["source_id_map"] = self._source_id_map(set(self._source_map))
+            res["source_id_map"] = self._source_id_map(set(self.index.source_map))
         return res
 
     def source_tree(self, study_id: str, tree_id: str, format: str | None = None,
@@ -481,70 +450,34 @@ class TreeOfLifeV3:
             raise BadInputError(f"Invalid source id '{source}' provided.")
         return {"newick": newick, "synth_id": self.store.tree_id}
 
-    def _request_closure(self, ids):
-        """Closure rows for a request's id set via the bucket-pruned
-        catalog fetch (ingest.read_pruned_closure) when the store has the
-        bucketed layout; None otherwise (callers fall back to the cached-
-        closure InSet scan). Above the driver gate the joined recipes want
-        the full closure, so the pruned fetch is skipped there too."""
-        if (
-            self.pruned_closure_table is None
-            or len(ids) > T.DRIVER_PATH_MAX_TIPS
-        ):
-            return None
-        from treemachine_spark.ingest import read_pruned_closure
-
-        return read_pruned_closure(
-            self.store.nodes.sparkSession,
-            self.pruned_closure_table,
-            list(ids),
-            synth_id=self.store.tree_id,
-        )
-
     def node_info(self, node_id=None, ott_id=None, include_lineage: bool = False) -> dict:
         """doNodeInfo (tree_of_life_v3.java:157-230); lineage is T8
         (GraphExplorer.getLineage:228-236), parent-first ordering."""
-        row = self._resolve_one(node_id, ott_id)
-        qid = row["node_id"]
+        p = self._locate(node_id, ott_id)
         sources: set = set()
-        res = dict(self._node_blobs([qid], sources)[qid])
+        res = self._blobs([p], sources)[0]
         if include_lineage:
-            src = self._request_closure([qid])
-            anc = [
-                r["ancestor_id"]
-                for r in T.path_to_root(
-                    src if src is not None else self.store.paths, qid
-                ).collect()
-            ]
-            blobs = self._node_blobs(anc, sources) if anc else {}
-            res["lineage"] = [blobs[a] for a in anc]
+            res["lineage"] = self._blobs(self.index.lineage(p), sources)
         res["source_id_map"] = self._source_id_map(sources)
         return res
 
     def mrca(self, node_ids=None, ott_ids=None) -> dict:
-        """doMrca (tree_of_life_v3.java:258-363): T2 over the closure, T3
-        nearest taxon when the MRCA is unnamed, 400-with-payload on bad ids."""
+        """doMrca (tree_of_life_v3.java:258-363): T2 by interval
+        containment, T3 nearest taxon when the MRCA is unnamed,
+        400-with-payload on bad ids."""
         if not node_ids and not ott_ids:
             raise BadInputError("You must supply at least one node_id or ott_id.")
-        found, bad_nodes, bad_otts = self._resolve_many(node_ids, ott_ids)
+        found, bad_nodes, bad_otts = self._locate_many(node_ids, ott_ids)
         if not found:
             raise BadIdsError(
                 "No valid ids provided.",
                 {"ott_ids_not_in_tree": bad_otts, "node_ids_not_in_tree": bad_nodes},
             )
-        spark = self.store.nodes.sparkSession
-        pruned = self._request_closure(found)
-        mrca_row = T.mrca(
-            self.store.paths_with_self(),
-            found,
-            paths=pruned if pruned is not None else self.store.paths,
-            root_id=self.store.root_id,
-        ).collect()[0]
-        mrca_id = mrca_row["mrca_node_id"]
+        m = self.index.mrca(found)
 
         res: dict = {}
         sources: set = set()
-        res["mrca"] = self._node_blobs([mrca_id], sources)[mrca_id]
+        res["mrca"] = self._blobs([m], sources)[0]
         res["source_id_map"] = self._source_id_map(sources)
         if bad_otts:
             res["ott_ids_not_in_tree"] = bad_otts
@@ -553,23 +486,11 @@ class TreeOfLifeV3:
 
         if "taxon" not in res["mrca"]:
             # T3 — nearest taxonomic ancestor (GraphExplorer.java:654-664)
-            named = self.store.nodes.where(F.col("ott_id").isNotNull()).select(
-                F.col("node_id").alias("ancestor_id")
-            )
-            mrca_paths = self._request_closure([mrca_id])
-            mrta_row = (
-                (mrca_paths if mrca_paths is not None else self.store.paths)
-                .where(F.col("node_id") == mrca_id)
-                .join(named, "ancestor_id")
-                .orderBy("depth")
-                .limit(1)
-                .collect()
-            )
-            if mrta_row:
-                trow = self.store.nodes.where(
-                    F.col("node_id") == mrta_row[0]["ancestor_id"]
-                ).collect()[0]
-                res["nearest_taxon"] = self._taxon_blob(trow.asDict())
+            t = self.index.nearest_taxon(m)
+            if t >= 0:
+                res["nearest_taxon"] = self._taxon_blob(
+                    self.index.records([t], _TAXON_COLUMNS)[0]
+                )
 
         if bad_otts or bad_nodes:
             raise BadIdsError("Some ids not found or not in tree.", res)
@@ -593,18 +514,18 @@ class TreeOfLifeV3:
                 'Valid formats: "newick" (default) or "arguson".'
             )
         label_format = self._check_label_format(label_format)
-        row = self._resolve_one(node_id, ott_id)
-        qid = row["node_id"]
+        p = self._locate(node_id, ott_id)
 
         if tree_format == "newick":
             depth = height_limit if height_limit is not None else -1
             cap = self.max_tips_newick if self.enforce_caps else None
-            return self._subtree_newick(qid, depth, label_format, include_all_node_labels, cap)
+            return self._subtree_newick(p, depth, label_format, include_all_node_labels, cap)
         depth = height_limit if height_limit is not None else 5
         cap = self.max_tips_arguson if self.enforce_caps else None
-        return {"arguson": self._arguson(qid, depth, cap)}
+        return {"arguson": self._arguson(p, depth, cap)}
 
     def _subtree_edges(self, qid: str, depth: int):
+        """Subtree edge rows over the closure, for the distributed paths."""
         sub = self.store.paths.where(F.col("ancestor_id") == qid)
         if depth >= 0:
             sub = sub.where(F.col("depth") <= depth)
@@ -623,29 +544,17 @@ class TreeOfLifeV3:
             )
         )
 
-    def _guard(self, qid: str, depth: int, cap: int | None) -> None:
+    def _guard(self, p: int, depth: int, cap: int | None) -> None:
         """O3 — pre-flight size guard (tree_of_life_v3.java:685-700):
-        O(1) stored tip_descendants when unbounded, T5 count when bounded."""
+        stored tip_descendants when unbounded, the cut subtree's tip count
+        (T5) when bounded."""
         if cap is None:
             return
         if depth < 0:
-            edge = self.store.edges.where(F.col("child_id") == qid).collect()
-            n = (
-                int(edge[0]["tip_descendants"])
-                if edge
-                else int(self.store.tree_meta.get("num_tips", 0))
-            )
+            td = self.index.values("tip_descendants", [p])[0]
+            n = int(self.store.tree_meta.get("num_tips", 0)) if td is None else int(td)
         else:
-            sub = self._subtree_edges(qid, depth)
-            n = (
-                sub.select(F.col("child_id").alias("node_id"))
-                .join(
-                    sub.select(F.col("parent_id").alias("node_id")).distinct(),
-                    "node_id",
-                    "left_anti",
-                )
-                .count()
-            )
+            n = self.index.frontier_count(p, depth)
         if n > cap:
             raise TreeTooBigError(
                 f"Requested tree ({n} tips) is larger than currently allowed ({cap} tips)."
@@ -656,46 +565,45 @@ class TreeOfLifeV3:
     # the reference instead refuses requests over 100k tips
     DISTRIBUTED_NEWICK_THRESHOLD = 200_000
 
-    def _subtree_newick(self, qid, depth, label_format, ids_for_unnamed, cap) -> dict:
-        self._guard(qid, depth, cap)
-        edges = self._subtree_edges(qid, depth)
-        n_edges = edges.count()
+    def _subtree_newick(self, p, depth, label_format, ids_for_unnamed, cap) -> dict:
+        self._guard(p, depth, cap)
+        qid = self.index.node_id[p]
+        members = self.index.subtree(p, depth)
+        if len(members) > self.DISTRIBUTED_NEWICK_THRESHOLD:
+            return self._subtree_newick_distributed(qid, depth, label_format, ids_for_unnamed)
+        ids = self.index.node_id
+        rows = list(
+            zip(
+                ids[members].tolist(),
+                ids[self.index.parent[members]].tolist(),
+                self.index.values("branch_length", members),
+                self.index.values("child_index", members),
+            )
+        )
+        labels = self._labels(np.append(members, p), label_format, ids_for_unnamed)
+        newick = assemble_newick(rows, qid, labels)
+        sources = self.index.annotation_keys(members, ("supported_by",))
+        return {
+            "newick": newick,
+            "supporting_studies": self._supporting_studies(sources),
+        }
 
+    def _subtree_newick_distributed(self, qid, depth, label_format, ids_for_unnamed) -> dict:
+        from treemachine_spark.exporters.newick_sink import distributed_newick
+
+        edges = self._subtree_edges(qid, depth)
         member = edges.select(F.col("child_id").alias("node_id"))
         sources: set = {
             r["s"] for r in self._distinct_sources_df(member).collect()
         }
-
-        if n_edges > self.DISTRIBUTED_NEWICK_THRESHOLD:
-            from treemachine_spark.exporters.newick_sink import distributed_newick
-
-            spark = self.store.nodes.sparkSession
-            member_plus = member.unionByName(
-                T.local_df(spark, [(qid,)], "node_id string")
-            )
-            labels_df = self._labels_df(member_plus, label_format, ids_for_unnamed)
-            newick = distributed_newick(
-                edges, self.store.paths, qid, labels_df, anchor_depth="auto"
-            )
-        else:
-            rows = edges.select(
-                "child_id", "parent_id", "branch_length", "child_index"
-            ).collect()
-            member_ids = {r["child_id"] for r in rows} | {qid}
-            spark = self.store.nodes.sparkSession
-            mdf = T.local_df(spark, [(i,) for i in member_ids], "node_id string")
-            node_rows = self.store.nodes.join(
-                F.broadcast(mdf), "node_id", "left_semi"
-            ).collect()
-            labels = self._labels(node_rows, label_format, ids_for_unnamed)
-            newick = assemble_newick(
-                [
-                    (r["child_id"], r["parent_id"], r["branch_length"], r["child_index"])
-                    for r in rows
-                ],
-                qid,
-                labels,
-            )
+        spark = self.store.nodes.sparkSession
+        member_plus = member.unionByName(
+            T.local_df(spark, [(qid,)], "node_id string")
+        )
+        labels_df = self._labels_df(member_plus, label_format, ids_for_unnamed)
+        newick = distributed_newick(
+            edges, self.store.paths, qid, labels_df, anchor_depth="auto"
+        )
         return {
             "newick": newick,
             "supporting_studies": self._supporting_studies(sources),
@@ -723,81 +631,46 @@ class TreeOfLifeV3:
     # over 25k tips (tree_of_life_v3.java:592,711-716)
     DISTRIBUTED_ARGUSON_THRESHOLD = 200_000
 
-    def _arguson(self, qid: str, depth: int, cap: int | None) -> dict:
+    def _arguson(self, p: int, depth: int, cap: int | None) -> dict:
         """S9 — getArgusonData (GraphExplorer.java:342-354,434-447): nested
         node blobs with children (depth-limited) + lineage + source_id_map.
         Unnamed nodes get descendant_name_list (getNodeBlobArguson,
-        GraphExplorer.java:415-429) via the T9 min/max-named-descendant
-        recipe — one batched aggregation instead of per-node recursion.
-        Past DISTRIBUTED_ARGUSON_THRESHOLD edges the nested blobs are
-        assembled executor-side per anchor subtree (VERDICT r6 #4 — the
-        cap the reference hard-codes becomes opt-in, like newick's)."""
-        self._guard(qid, depth, cap)
-        edges = self._subtree_edges(qid, depth)
-        spark = self.store.nodes.sparkSession
-        member = edges.select(F.col("child_id").alias("node_id"))
-        member_plus = member.unionByName(
-            T.local_df(spark, [(qid,)], "node_id string")
-        )
+        GraphExplorer.java:415-429). Past DISTRIBUTED_ARGUSON_THRESHOLD
+        edges the nested blobs are assembled executor-side per anchor
+        subtree (VERDICT r6 #4 — the cap the reference hard-codes becomes
+        opt-in, like newick's)."""
+        self._guard(p, depth, cap)
+        members = self.index.subtree(p, depth)
         # arguson collects source keys from ALL annotation maps
-        # (getSourceIDMap input) — vocabulary-scale distinct, A2 discipline
-        sources: set = {
-            r["s"]
-            for r in self._distinct_sources_df(
-                member_plus, fields=tuple(_ANN_FIELDS)
-            ).collect()
-        }
-        n_edges = edges.count()
-        if n_edges > self.DISTRIBUTED_ARGUSON_THRESHOLD:
+        # (getSourceIDMap input), over the members, p and the lineage
+        sources: set = set()
+        if len(members) > self.DISTRIBUTED_ARGUSON_THRESHOLD:
+            qid = self.index.node_id[p]
+            edges = self._subtree_edges(qid, depth)
+            member = edges.select(F.col("child_id").alias("node_id"))
+            member_plus = member.unionByName(
+                T.local_df(self.store.nodes.sparkSession, [(qid,)], "node_id string")
+            )
+            sources.update(
+                r["s"]
+                for r in self._distinct_sources_df(
+                    member_plus, fields=tuple(_ANN_FIELDS)
+                ).collect()
+            )
             top = self._arguson_distributed(qid, edges, member)
         else:
-            top = self._arguson_driver(qid, edges)
-        anc = [r["ancestor_id"] for r in T.path_to_root(self.store.paths, qid).collect()]
-        lineage_blobs = self._node_blobs(anc, sources) if anc else {}
-        top["lineage"] = [lineage_blobs[a] for a in anc]
+            order = np.append(p, members)
+            blobs = self._blobs(order, sources)
+            self._add_descendant_names(blobs, order)
+            # members are in pre order, so each parent's children list
+            # fills in sibling order, after the parent's own fields
+            by_pos = dict(zip(order.tolist(), blobs))
+            for m, par in zip(members.tolist(), self.index.parent[members].tolist()):
+                by_pos[par].setdefault("children", []).append(by_pos[m])
+            top = blobs[0]
+        top["lineage"] = self._blobs(self.index.lineage(p), sources)
         top["source_id_map"] = self._source_id_map(sources)
         return top
-
-    def _fill_descendant_names(self, blobs: dict[str, dict], skip=()) -> None:
-        """descendant_name_list for unnamed blobs (request-scale isin over
-        the T9 aggregate)."""
-        from treemachine_spark.graph.traversal import representative_names
-
-        unnamed = [
-            nid
-            for nid, b in blobs.items()
-            if "taxon" not in b and nid not in skip
-        ]
-        if not unnamed:
-            return
-        reps = (
-            representative_names(self.store.paths, self.store.nodes)
-            .where(F.col("ancestor_id").isin(unnamed))
-            .collect()
-        )
-        rep_map = {
-            r["ancestor_id"]: [r["first_name"], r["last_name"]] for r in reps
-        }
-        for nid in unnamed:
-            if nid in rep_map:
-                blobs[nid]["descendant_name_list"] = rep_map[nid]
-
-    def _arguson_driver(self, qid: str, edges) -> dict:
-        """Driver-side nested-blob assembly (requests within the
-        reference's own working envelope; default depth 5)."""
-        rows = edges.select("child_id", "parent_id", "child_index").collect()
-        member = [r["child_id"] for r in rows] + [qid]
-        blobs = self._node_blobs(member)
-        self._fill_descendant_names(blobs)
-        kids: dict[str, list] = {}
-        for r in sorted(rows, key=lambda r: (r["parent_id"], r["child_index"] or 0)):
-            kids.setdefault(r["parent_id"], []).append(r["child_id"])
-        def build(nid: str) -> dict:
-            blob = dict(blobs[nid])
-            if nid in kids:
-                blob["children"] = [build(c) for c in kids[nid]]
-            return blob
-        return build(qid)
 
     def _arguson_distributed(
         self, qid: str, edges, member, anchor_depth: int | str = "auto"
@@ -913,12 +786,19 @@ class TreeOfLifeV3:
             "left_semi",
         )
         rows = top_edges.collect()
-        blobs = self._node_blobs([r["child_id"] for r in rows] + [qid])
         # anchors' blobs (incl. their descendant_name_list) live in frags
-        self._fill_descendant_names(blobs, skip=frags)
+        ids = [r["child_id"] for r in rows if r["child_id"] not in frags] + [qid]
+        pos = self.index.positions(ids)
+        stitched = self._blobs(pos)
+        self._add_descendant_names(stitched, pos)
+        blobs = dict(zip(ids, stitched))
         blobs.update(frags)
+        # siblings in (child_index, id) order, as the fragments and the
+        # index assemble them
         kids: dict[str, list] = {}
-        for r in sorted(rows, key=lambda r: (r["parent_id"], r["child_index"] or 0)):
+        for r in sorted(
+            rows, key=lambda r: (r["parent_id"], r["child_index"] or 0, r["child_id"])
+        ):
             kids.setdefault(r["parent_id"], []).append(r["child_id"])
         def build(nid: str) -> dict:
             blob = dict(blobs[nid])
@@ -928,38 +808,25 @@ class TreeOfLifeV3:
         return build(qid)
 
     def induced_subtree(self, node_ids=None, ott_ids=None, label_format=None) -> dict:
-        """doInducedSubtree (tree_of_life_v3.java:411-518): T6 over the
-        closure; 400-with-payload when ids are bad (BadIdsException)."""
+        """doInducedSubtree (tree_of_life_v3.java:411-518): T6 from the
+        index (the request nodes plus every proper ancestor of two or more
+        of them, each wired to its nearest kept ancestor); 400-with-payload
+        when ids are bad (BadIdsException)."""
         label_format = self._check_label_format(label_format)
-        found, bad_nodes, bad_otts = self._resolve_many(node_ids, ott_ids)
+        found, bad_nodes, bad_otts = self._locate_many(node_ids, ott_ids)
         if len(found) < 2:
             raise BadInputError(
                 "Not enough valid node ids provided to construct a subtree "
                 "(there must be at least two)."
             )
-        spark = self.store.nodes.sparkSession
-        # the induced fast path only reads depth>0 closure rows of the
-        # request tips — exactly what the bucket-pruned fetch returns
-        pruned = self._request_closure(found)
-        ind_edges = T.induced_subtree(
-            pruned if pruned is not None else self.store.paths_with_self(),
-            found,
-        )
-        rows = [(r["child_id"], r["parent_id"]) for r in ind_edges.collect()]
-        members = {c for c, _ in rows} | {p for _, p in rows}
-        root_candidates = {p for _, p in rows} - {c for c, _ in rows}
-        root_id = root_candidates.pop() if root_candidates else found[0]
-
-        mdf = T.local_df(spark, [(i,) for i in members], "node_id string")
-        node_rows = self.store.nodes.join(F.broadcast(mdf), "node_id", "left_semi").collect()
-        labels = self._labels(node_rows, label_format, ids_for_unnamed=True)
-
-        # request-scale input, but dedup executor-side anyway (same
-        # vocabulary-scale-collect shape as _subtree_newick)
-        sources: set = {
-            r["s"]
-            for r in self._distinct_sources_df(F.broadcast(mdf)).collect()
-        }
+        child, parent = self.index.induced_edges(found)
+        ids = self.index.node_id
+        rows = list(zip(ids[child].tolist(), ids[parent].tolist()))
+        members = np.union1d(child, parent)
+        # the induced root is the kept node first in pre order
+        root_id = ids[members[0]] if len(members) else ids[found[0]]
+        labels = self._labels(members, label_format, ids_for_unnamed=True)
+        sources = self.index.annotation_keys(members, ("supported_by",))
 
         res: dict = {}
         if bad_otts:

@@ -19,7 +19,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from treemachine_spark.graph.closure import build_closure, with_self_paths
+from treemachine_spark.graph.closure import build_closure
 from treemachine_spark.sources.annotations import read_annotations, with_taxonomy_support
 from treemachine_spark.sources.newick import newick_to_dataframes
 from treemachine_spark.sources.taxonomy import filter_to_tree, read_taxonomy_tsv
@@ -48,14 +48,13 @@ class GraphStore:
     node_annotations: DataFrame
     source_map: DataFrame
     tree_meta: dict
+    # the write_store directory the tables were loaded from, if any
+    path: str | None = None
 
     def cache(self) -> "GraphStore":
         for df in (self.nodes, self.edges, self.paths, self.node_annotations, self.source_map):
             df.cache()
         return self
-
-    def paths_with_self(self) -> DataFrame:
-        return with_self_paths(self.paths, self.nodes)
 
 
 def ingest_synthesis_data(
@@ -399,6 +398,10 @@ def delete_all_trees(out_dir: str) -> None:
 
 
 def load_store(spark: SparkSession, out_dir: str) -> GraphStore:
+    """Load a ``write_store`` snapshot, uncached: serving answers the tree
+    routes from a TreeIndex read straight from the snapshot's files, and
+    the tables' Spark readers (distributed subtree assembly, exports) scan
+    parquet."""
     import json as _json
 
     with open(os.path.join(out_dir, "tree_meta.json")) as fh:
@@ -412,4 +415,5 @@ def load_store(spark: SparkSession, out_dir: str) -> GraphStore:
         node_annotations=spark.read.parquet(os.path.join(out_dir, "node_annotations")),
         source_map=spark.read.parquet(os.path.join(out_dir, "source_map")),
         tree_meta=meta,
-    ).cache()
+        path=out_dir,
+    )

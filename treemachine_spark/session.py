@@ -9,6 +9,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_session_size(env, cores: int, mem_total_kb: int) -> tuple[str, str]:
+    """(local[N] cores, driver heap) for a session: ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_DRIVER_MEM`` from ``env`` when set, else every core this
+    process may run on and a quarter of the host's memory."""
+    cpus = env.get("SPARK_GRAFT_CPUS") or str(max(1, cores))
+    heap = env.get("SPARK_DRIVER_MEM") or f"{max(512, mem_total_kb // 4 // 1024)}m"
+    return cpus, heap
+
+
+def _host_resources() -> tuple[int, int]:
+    """(usable cores, MemTotal in kB) of this host."""
+    try:
+        cores = len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        cores = os.cpu_count() or 1
+    try:
+        with open("/proc/meminfo") as fh:
+            mem_kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        mem_kb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    return cores, mem_kb
+
+
 def get_spark(app_name: str = "treemachine-spark") -> SparkSession:
     """Build (or fetch) a SparkSession.
 
@@ -18,7 +41,7 @@ def get_spark(app_name: str = "treemachine-spark") -> SparkSession:
     shuffle data at 100 TB (spark.sql.shuffle.partitions is a starting hint
     only once AQE is on).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = host_session_size(os.environ, *_host_resources())
     # OPT-IN weighted route-family pools: TREEMACHINE_SCHEDULER_XML=default
     # loads the packaged fairscheduler.xml (interactive 4 / index 2 /
     # tree-heavy 1 FIFO), or point it at your own allocation file. Kept
@@ -57,7 +80,7 @@ def get_spark(app_name: str = "treemachine-spark") -> SparkSession:
         # concurrent-ingest job packing keeps working.
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
